@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.functions.expressions.DupBigramFrac.dupBigramFrac
 import graft.operators.{AdaptiveGate, Dedup, LangId, SubstringDedup, Winnowing}
 
 /** End-to-end corpus curation — the composed production job the
@@ -57,9 +58,14 @@ import graft.operators.{AdaptiveGate, Dedup, LangId, SubstringDedup, Winnowing}
   *      over-filters low-resource languages, a per-group rank cannot.
   *   5. REPETITION GATE — drop documents whose duplicate word-2-gram
   *      fraction exceeds the threshold (the Gopher/MassiveText rule).
-  *      Computed per-row with array_distinct — map-side, NO shuffle;
-  *      the per-gram-count formulation (q112) is for reporting, not
-  *      gating.
+  *      Computed per-row by the native
+  *      [[graft.functions.expressions.DupBigramFrac]] kernel — one
+  *      split per document, map-side, NO shuffle. It replaced a
+  *      composed `transform(sequence(..))` over `split(text, " ")`
+  *      whose cost was quadratic in the word count: Catalyst inlines
+  *      the `split` into the lambda, so every gram re-split the whole
+  *      document. The per-gram-count formulation (q112) is for
+  *      reporting, not gating.
   *   5b. PERPLEXITY GATE (off unless maxAvgNll is set) — the
   *      model-based quality signal (KnLm, q437's operator): a
   *      Kneser-Ney bigram model fit on the current survivors scores
@@ -287,18 +293,8 @@ object CurationPipeline {
         .drop("__ttr"))
 
     // 5. repetition gate: duplicate-2-gram fraction, computed per-row
-    val repGated = count("repetition_gate", {
-      val ws = split(col("text"), " ")
-      val grams = expr(
-        "transform(sequence(1, greatest(size(ws) - 1, 1)), i -> concat(element_at(ws, i), ' ', element_at(ws, least(i + 1, size(ws)))))")
-      adapted
-        .withColumn("ws", ws)
-        .withColumn("__dup_frac",
-          lit(1.0) - size(array_distinct(grams)).cast("double") /
-            size(grams).cast("double"))
-        .filter(col("__dup_frac") <= maxDupGramFrac)
-        .drop("ws", "__dup_frac")
-    })
+    val repGated = count("repetition_gate",
+      repetitionGate(adapted, maxDupGramFrac))
 
     // 5b. model-based perplexity gate (off unless maxAvgNll is set):
     // Kneser-Ney bigram model fit on the CURRENT survivors, documents
@@ -349,6 +345,13 @@ object CurationPipeline {
 
     (packed, funnel.result(), stageFrames.result())
   }
+
+  /** Stage-5 gate: keeps documents whose duplicate word-2-gram
+    * fraction is at most `maxDupGramFrac`. Shared with the streaming
+    * twin ([[graft.streaming.StreamingCuration]]), so both funnels gate
+    * through the same kernel. */
+  def repetitionGate(docs: DataFrame, maxDupGramFrac: Double): DataFrame =
+    docs.filter(dupBigramFrac(col("text")) <= maxDupGramFrac)
 
   /** Stage-2d heavy set: doc_ids whose duplicated-fingerprint fraction
     * exceeds `maxWinnowDupFrac`. Winnowing.fingerprints emits per-doc

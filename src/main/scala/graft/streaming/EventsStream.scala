@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming surface over the `events` table.
@@ -32,11 +36,37 @@ object EventsStream {
     * [[DrainPartitions]] — the conf is read at query START, so wrapping
     * the whole build+drain is sufficient and the session value is
     * restored for whatever runs next. */
-  def withDrainPartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, DrainPartitions.toString)
-    try body finally spark.conf.set(key, prev)
+  def withDrainPartitions[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", DrainPartitions.toString)(body)
+
+  /** Runs `body` with session conf `key` set to `value`, then puts the
+    * session back as it was: the previous value if `key` was set, unset
+    * otherwise — so a drain never leaks its settings into the queries
+    * that share the session after it. */
+  def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Root of the drains' checkpoint dirs: `graft_stream_ckpt` under the
+    * session warehouse (the [[graft.operators.ModelStore.artifactPath]]
+    * convention), instead of one anonymous temp dir per query. */
+  def checkpointRoot(spark: SparkSession): String =
+    spark.sessionState.conf.warehousePath.stripSuffix("/") + "/graft_stream_ckpt"
+
+  /** Starts the query `writer` describes against a fresh checkpoint dir
+    * under [[checkpointRoot]], drains everything available, stops it and
+    * deletes the dir. Every finite drain in graft.streaming goes through
+    * here. */
+  def drain(spark: SparkSession, name: String)(writer: DataStreamWriter[_]): Unit = {
+    val dir = new Path(checkpointRoot(spark), s"$name-${UUID.randomUUID()}")
+    val q = writer.option("checkpointLocation", dir.toString).start()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+    }
   }
 
   /** Schema of the current driver testdata's events.parquet (`ts` is
@@ -81,13 +111,10 @@ object EventsStream {
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
               col("n_events"), round(col("sum_value"), 4).as("sum_value"))
-    val q = agg.writeStream
+    drain(spark, queryName)(agg.writeStream
       .outputMode("complete")
       .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .queryName(queryName))
     spark.table(queryName)
   }
 
@@ -106,13 +133,10 @@ object EventsStream {
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("n_events"), round(col("sum_value"), 4).as("sum_value"))
-    val q = agg.writeStream
+    drain(spark, queryName)(agg.writeStream
       .outputMode("append")
       .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .queryName(queryName))
     spark.table(queryName)
   }
 
@@ -143,10 +167,8 @@ object EventsStream {
       .select(col("user_id"), col("purchase_id"), col("click_id"),
               round((unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
                       .cast("double") / 1e6, 6).as("gap_s"))
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
+    drain(spark, queryName)(joined.writeStream
+      .outputMode("append").format("memory").queryName(queryName))
     spark.table(queryName)
   }
 
@@ -174,10 +196,8 @@ object EventsStream {
       .join(broadcast(static), col("user_id") === col("s_user_id"))
       .select(col("event_id"), col("user_id"),
               col("n_purchases"), col("total_purchase"))
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
+    drain(spark, queryName)(joined.writeStream
+      .outputMode("append").format("memory").queryName(queryName))
     spark.table(queryName)
   }
 
@@ -209,10 +229,8 @@ object EventsStream {
         col("c_ts") <= col("p_ts"),
         "left_outer")
       .select(col("user_id"), col("purchase_id"), col("click_id"))
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
+    drain(spark, queryName)(joined.writeStream
+      .outputMode("append").format("memory").queryName(queryName))
     spark.table(queryName)
   }
 
@@ -228,10 +246,8 @@ object EventsStream {
     val deduped = readEvents(spark, dir)
       .withWatermark("ts", "24 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-    val q = deduped.writeStream
-      .outputMode("append").format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
+    drain(spark, queryName)(deduped.writeStream
+      .outputMode("append").format("memory").queryName(queryName))
     spark.table(queryName)
   }
 
@@ -244,16 +260,13 @@ object EventsStream {
     * exactly-once delivery for object-store sinks. */
   def foreachBatchToParquet(spark: SparkSession, dir: String,
                             outDir: String): Unit = withDrainPartitions(spark) {
-    val q = readEvents(spark, dir)
+    drain(spark, "foreach_batch")(readEvents(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
   }
 
   /** Watermarked append-mode variant (the production streaming shape:

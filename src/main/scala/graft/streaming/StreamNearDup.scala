@@ -87,10 +87,8 @@ object StreamNearDup {
         .filter(col("est_jaccard") >= threshold)
         .dropDuplicates("in_id", "idx_id")
 
-      val q = flagged.writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      q.processAllAvailable()
-      q.stop()
+      EventsStream.drain(spark, queryName)(flagged.writeStream
+        .outputMode("append").format("memory").queryName(queryName))
       spark.table(queryName)
     }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions
 import graft.operators.{AdaptiveGate, Dedup, KnLm, LangId, QualityClassifier, SubstringDedup, Winnowing}
+import graft.pipelines.CurationPipeline
 
 /** Streaming twin of [[graft.pipelines.CurationPipeline]]: the full
   * curation funnel applied at INGESTION time, with the historical
@@ -51,7 +52,11 @@ import graft.operators.{AdaptiveGate, Dedup, KnLm, LangId, QualityClassifier, Su
   *      n_docs >= 2 on both sides).
   *   3. decontamination → broadcast static benchmark-shingle set
   *      (already content-based: an unseen contaminated doc is caught).
-  *   4/5. quality + repetition gates → identical map-side expressions.
+  *   4/5. quality + repetition gates → identical map-side expressions;
+  *      the repetition gate IS the batch stage's
+  *      [[graft.pipelines.CurationPipeline.repetitionGate]] (the native
+  *      one-split [[graft.functions.expressions.DupBigramFrac]] kernel),
+  *      so the two funnels cannot drift apart on it.
   *   4b. adaptive quality gate → the per-language CUT KEY distillate
   *      ([[graft.operators.AdaptiveGate.cutKeys]]: each language's
   *      first kept (ttr, doc_id) pair under the batch rank rule) —
@@ -305,17 +310,8 @@ object StreamingCuration {
       val knModel: Option[KnLm.Model] =
         if (maxAvgNll == Double.PositiveInfinity) None
         else {
-          val adaptSt = applyAdaptiveCut(qualSt)
-          val ws0 = split(col("text"), " ")
-          val grams0 = expr(
-            "transform(sequence(1, greatest(size(ws) - 1, 1)), i -> concat(element_at(ws, i), ' ', element_at(ws, least(i + 1, size(ws)))))")
-          val repSt = adaptSt
-            .withColumn("ws", ws0)
-            .withColumn("__dup_frac",
-              lit(1.0) - size(array_distinct(grams0)).cast("double") /
-                size(grams0).cast("double"))
-            .filter(col("__dup_frac") <= maxDupGramFrac)
-            .drop("ws", "__dup_frac")
+          val repSt = CurationPipeline.repetitionGate(
+            applyAdaptiveCut(qualSt), maxDupGramFrac)
           Some(KnLm.fit(repSt, "doc_id", "text"))
         }
 
@@ -404,17 +400,8 @@ object StreamingCuration {
         val quality = s3
           .filter(col("n_chars") >= 64 && col("n_chars") <= 4096)
           .filter(size(TextFunctions.tokens(col("text"))) >= 8)
-        val adapted = applyAdaptiveCut(quality)
-        val ws = split(col("text"), " ")
-        val grams = expr(
-          "transform(sequence(1, greatest(size(ws) - 1, 1)), i -> concat(element_at(ws, i), ' ', element_at(ws, least(i + 1, size(ws)))))")
-        val repetitionOut = adapted
-          .withColumn("ws", ws)
-          .withColumn("__dup_frac",
-            lit(1.0) - size(array_distinct(grams)).cast("double") /
-              size(grams).cast("double"))
-          .filter(col("__dup_frac") <= maxDupGramFrac)
-          .drop("ws", "__dup_frac")
+        val repetitionOut = CurationPipeline.repetitionGate(
+          applyAdaptiveCut(quality), maxDupGramFrac)
         val gated = knModel match {
           case None => repetitionOut
           case Some(m) =>
@@ -432,7 +419,7 @@ object StreamingCuration {
       val incoming = spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(srcDir)
-      val q = incoming.writeStream
+      EventsStream.drain(spark, "curation")(incoming.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val sess = batch.sparkSession
           val (gated, nContaminated, scorePsi) = curateBatch(batch)
@@ -489,11 +476,6 @@ object StreamingCuration {
                           s.triplet_ok, s.batch_contaminated,
                           s.score_psi)""")
           ()
-        }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("curation_ckpt").toString)
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        })
     }
 }

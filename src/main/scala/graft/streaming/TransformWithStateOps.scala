@@ -158,20 +158,21 @@ object TransformWithStateOps extends Serializable {
   def runningUserProfileToMemory(spark: SparkSession, dir: String,
                                  queryName: String): DataFrame =
       EventsStream.withDrainPartitions(spark) {
-    // transformWithState requires the RocksDB state store provider.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val out = EventsStream.readEvents(spark, dir)
-      .select(col("user_id"), col("event_type"), col("value"))
-      .as[EventIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new RunningUserProfile,
-        TimeMode.None(), OutputMode.Update(), Encoders.product[UserOut])
-    val q = out.writeStream
-      .outputMode("update").format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
+    // transformWithState requires the RocksDB state store provider;
+    // scoped to this drain, so later stateful queries on the shared
+    // session keep the session's own provider
+    EventsStream.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      import spark.implicits._
+      val out = EventsStream.readEvents(spark, dir)
+        .select(col("user_id"), col("event_type"), col("value"))
+        .as[EventIn]
+        .groupByKey(_.user_id)
+        .transformWithState(new RunningUserProfile,
+          TimeMode.None(), OutputMode.Update(), Encoders.product[UserOut])
+      EventsStream.drain(spark, queryName)(out.writeStream
+        .outputMode("update").format("memory").queryName(queryName))
+    }
     spark.table(queryName)
       .groupBy(col("user_id"))
       .agg(max_by(

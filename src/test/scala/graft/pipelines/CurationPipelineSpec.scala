@@ -22,6 +22,19 @@ class CurationPipelineSpec extends GraftTestBase {
     assert(funnel.last.docs > 0, "pipeline filtered everything out")
   }
 
+  test("funnel counts on sf0.001 are pinned stage by stage") {
+    // a change to any gate's arithmetic (the repetition kernel above
+    // all) moves these; the tight-threshold run makes stage 5 drop
+    // documents so its own count is pinned, not just passed through
+    val counts = funnel.map(_.docs)
+    val tight = CurationPipeline.run(spark, Tables(spark, sf001)("documents"),
+      maxDupGramFrac = 0.05)._2.map(_.docs)
+    assert(counts == Seq[Long](500, 500, 500, 476, 476, 475, 475, 250,
+      238, 238, 238, 238, 238, 200))
+    assert(tight == Seq[Long](500, 500, 500, 476, 476, 475, 475, 250,
+      238, 238, 195, 195, 195, 164))
+  }
+
   test("domain cap bounds per-source counts and keeps determinism") {
     val (cappedRun, f) = CurationPipeline.run(
       spark, Tables(spark, sf001)("documents"), domainCap = 5L)

@@ -353,6 +353,23 @@ class PlanShapeSpec extends GraftTestBase {
     }.isEmpty, "winnow gate planned a window (per-fp single-task skew risk)")
   }
 
+  test("repetition gate is one native kernel call, not a lambda over re-split words") {
+    // the composed form it replaced had Catalyst inline split(text, " ")
+    // into a transform lambda: every gram re-split the whole document
+    val docs = graft.Tables(spark, sf001)("documents")
+    val exprs = graft.pipelines.CurationPipeline
+      .repetitionGate(docs, 0.6)
+      .queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(!exprs.exists {
+      case _: org.apache.spark.sql.catalyst.expressions.ArrayTransform => true
+      case _: org.apache.spark.sql.catalyst.expressions.LambdaFunction => true
+      case _                                                           => false
+    }, "repetition gate planned a higher-order function")
+    assert(exprs.exists(_.isInstanceOf[graft.functions.expressions.DupBigramFrac]),
+      "repetition gate does not use the DupBigramFrac kernel")
+  }
+
   test("skyline runs its global sort AFTER the local prune (two windows)") {
     val p = plan("q143_skyline")
     val winds = p.collect {

@@ -83,4 +83,21 @@ class StreamingRobustnessSpec extends GraftTestBase {
       }
     }
   }
+
+  test("drains checkpoint under the warehouse root and delete it after stop") {
+    val root = new java.io.File(
+      new java.net.URI(EventsStream.checkpointRoot(spark)))
+    def leftovers(prefix: String): Seq[String] =
+      Option(root.listFiles()).toSeq.flatten.map(_.getName)
+        .filter(_.startsWith(prefix + "-"))
+    var seen = Seq.empty[String]
+    val name = "ckpt_cleanup_out"
+    // the checkpoint exists while the query runs ...
+    EventsStream.drain(spark, name)(EventsStream.readEvents(spark, sf001)
+      .writeStream
+      .foreachBatch { (_: DataFrame, _: Long) => seen = leftovers(name) })
+    assert(seen.size == 1, s"no checkpoint under $root while running")
+    // ... and is gone once it stopped
+    assert(leftovers(name).isEmpty, s"checkpoint left behind under $root")
+  }
 }

@@ -14,6 +14,25 @@ import graft.GraftTestBase
   * q84_tws_profile can't distinguish stateless from stateful. */
 class TransformWithStateSpec extends GraftTestBase {
 
+  test("q84's drain restores the session's state store provider") {
+    // the RocksDB provider it needs must not leak into later stateful
+    // queries on the shared session (they ran 3-10x slower on it)
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    spark.conf.unset(key)
+    val unsetBefore = spark.conf.getAll.get(key)
+    val rows = TransformWithStateOps
+      .runningUserProfileToMemory(spark, sf001, "tws_restore_unset").count()
+    assert(rows > 0)
+    assert(spark.conf.getAll.get(key) == unsetBefore && unsetBefore.isEmpty)
+
+    val hdfs =
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    spark.conf.set(key, hdfs)
+    TransformWithStateOps.runningUserProfileToMemory(spark, sf001, "tws_restore_set")
+    assert(spark.conf.getAll.get(key) == Some(hdfs))
+    spark.conf.unset(key)
+  }
+
   test("per-user profile accumulates across micro-batches and matches batch agg") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.schema(EventsStream.rawSchema)
